@@ -1418,8 +1418,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, kind, text, media_ref, "offset" AS offset
             FROM read_parquet('{GOLDEN_FILES}')
         """,
+        # the ingest goldens store src_path relative to the repo root
         "file_ingest_gate": f"""
-            SELECT doc_id, src_path, ingest_status, n_spans
+            SELECT doc_id, '{_REPO}/' || src_path AS src_path,
+                   ingest_status, n_spans
             FROM read_parquet('{GOLDEN_INGEST}')
         """,
         "ocr_extract": f"""
@@ -1427,7 +1429,8 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{GOLDEN_OCR}')
         """,
         "ocr_ingest_gate": f"""
-            SELECT doc_id, src_path, ingest_status, n_spans
+            SELECT doc_id, '{_REPO}/' || src_path AS src_path,
+                   ingest_status, n_spans
             FROM read_parquet('{GOLDEN_OCR_INGEST}')
         """,
         "extract_from_warc": f"""
@@ -1435,8 +1438,8 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{GOLDEN_WARC}')
         """,
         "warc_ingest_gate": f"""
-            SELECT doc_id, src_path, record_uri, record_type, content_type,
-                   ingest_status
+            SELECT doc_id, '{_REPO}/' || src_path AS src_path, record_uri,
+                   record_type, content_type, ingest_status
             FROM read_parquet('{GOLDEN_WARC_INGEST}')
         """,
         "shard_packing": """

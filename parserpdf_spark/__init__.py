@@ -21,8 +21,15 @@ The engine's layers:
   interleaved-docs synthesizer.
 - :mod:`parserpdf_spark.plans`     — chunked checkpoint/commit/resume.
 - :mod:`parserpdf_spark.streaming` — incremental ingestion.
+- :mod:`parserpdf_spark.zipcache`  — keeps reused Python workers from
+  re-reading ``pyspark.zip`` before every task (installed on import).
 
 Reference parity notes cite ``/root/reference`` files as ``file:line``.
 """
+
+from parserpdf_spark import zipcache
+
+# every worker that unpickles an engine function passes through here once
+zipcache.install()
 
 __version__ = "0.1.0"

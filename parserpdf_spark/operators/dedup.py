@@ -638,10 +638,13 @@ def _srp_planes(dim: int, n_bits: int, seed: int):
     """Deterministic random hyperplanes (seeded, cached per process —
     the cache makes good on the docstring: the matmul UDFs call this
     once per Arrow batch, and regenerating the matrix per batch was
-    wasted executor work).  Callers treat the array as read-only."""
+    wasted executor work).  The shared array is read-only, so a caller
+    that writes to it raises instead of corrupting later signatures."""
     import numpy as np
 
-    return np.random.default_rng(seed).standard_normal((dim, n_bits))
+    planes = np.random.default_rng(seed).standard_normal((dim, n_bits))
+    planes.flags.writeable = False
+    return planes
 
 
 def _srp_band_params(n_vectors: int, threshold: float) -> tuple[int, int]:

@@ -244,6 +244,43 @@ def test_srp_signature_determinism(spark, sf_med):
     assert len(set(s1.values())) > 400  # random vectors spread buckets
 
 
+def test_srp_planes_read_only_and_signatures_unchanged(spark):
+    import numpy as np
+
+    from parserpdf_spark.operators.dedup import (
+        _srp_planes,
+        srp_band_keys,
+        srp_signatures,
+    )
+
+    planes = _srp_planes(8, 12, 7)
+    with pytest.raises(ValueError):
+        planes[0, 0] = 0.0
+    with pytest.raises(ValueError):
+        planes *= 2.0
+    assert _srp_planes(8, 12, 7) is planes  # the cached, shared array
+    assert np.array_equal(planes, np.random.default_rng(7).standard_normal((8, 12)))
+
+    # signatures and band keys equal ones computed from fresh planes
+    vecs = np.random.default_rng(0).standard_normal((40, 8))
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    bits = (vecs @ np.random.default_rng(7).standard_normal((8, 32))) >= 0.0
+    expected_sig = {
+        i: sum(int(bits[i, b]) << b for b in range(32)) for i in range(len(vecs))
+    }
+    assert {r.id: r.sig for r in srp_signatures(emb).collect()} == expected_sig
+    bits = (vecs @ np.random.default_rng(7).standard_normal((8, 12))) >= 0.0
+    expected_keys = {
+        i: [sum(int(bits[i, band * 4 + b]) << b for b in range(4)) for band in range(3)]
+        for i in range(len(vecs))
+    }
+    got_keys = srp_band_keys(emb, bits_per_band=4, num_bands=3).collect()
+    assert {r.id: list(r.keys) for r in got_keys} == expected_keys
+
+
 def test_winnow_determinism_and_shift_invariance():
     a = _winnow_one("the quick brown fox jumps over the lazy dog")
     b = _winnow_one("the  quick   brown fox jumps over the lazy dog")  # ws-normalized

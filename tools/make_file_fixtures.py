@@ -8,7 +8,8 @@ read:
 - ``goldens/extract_files.parquet``      — expected extraction spans for
   every ingestable fixture file (pure-python route + kernels, no Spark)
 - ``goldens/file_ingest_status.parquet`` — expected keep-with-status row
-  per scanned file
+  per scanned file, ``src_path`` relative to the repo root (as are the
+  OCR and WARC status goldens), so the gates hold from any checkout
 
 Regenerate (together, committed together) whenever the kernels, the
 synthesizer, or the routing in sources/files.py change:
@@ -1305,7 +1306,7 @@ def build_ocr_goldens() -> None:
         with open(path, "rb") as fh:
             routed = ocr_route_file(path, fh.read())
         status_rows["doc_id"].append(routed["doc_id"])
-        status_rows["src_path"].append(routed["src_path"])
+        status_rows["src_path"].append(os.path.relpath(routed["src_path"], REPO))
         status_rows["ingest_status"].append(routed["ingest_status"])
         status_rows["n_spans"].append(len(routed["spans"]))
         if routed["ingest_status"] != "ok":
@@ -1568,6 +1569,7 @@ def build_warc_goldens() -> None:
         with open(path, "rb") as fh:
             rows = warc_file_rows(path, fh.read())
         for r in rows:
+            r = dict(r, src_path=os.path.relpath(r["src_path"], REPO))
             for k in status_rows:
                 status_rows[k].append(r[k])
             if r["ingest_status"] != "ok":
@@ -1603,7 +1605,7 @@ def build_goldens() -> None:
         with open(path, "rb") as fh:
             routed = route_file(path, fh.read())
         status_rows["doc_id"].append(routed["doc_id"])
-        status_rows["src_path"].append(routed["src_path"])
+        status_rows["src_path"].append(os.path.relpath(routed["src_path"], REPO))
         status_rows["ingest_status"].append(routed["ingest_status"])
         status_rows["n_spans"].append(len(routed["spans"]))
         if routed["ingest_status"] != "ok":
